@@ -19,9 +19,8 @@ same driver-side control as connected components' convergence check —
 one row, not data), and a greedy non-overlapping merge application
 spelled entirely in window functions (runs of consecutive match
 positions keep even offsets — left-to-right greedy, exactly the
-reference BPE semantics). Lineage is cut per round with
-``localCheckpoint`` on the vocabulary-sized state, the previous round's
-cache released eagerly.
+reference BPE semantics). Lineage is cut per round (``cut``) on the
+vocabulary-sized state, the previous round's cache released eagerly.
 
 Determinism/parity: ties in the argmax break on (count DESC, left ASC,
 right ASC) — a documented deviation from insertion-order tie-breaking
@@ -45,6 +44,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from auraverse_etl_pipeline_spark.operators.caching import cut
 from auraverse_etl_pipeline_spark.runtime import ship_package
 
 #: Merge-table schema: one row per learned merge, in order.
@@ -146,7 +146,7 @@ def bpe_train(
     noise pairs only bloats the vocab. Per-round state is
     vocabulary-bounded and checkpointed; the corpus is scanned once."""
     spark = docs.sparkSession
-    syms = _initial_symbols(word_freqs(docs, text_col, id_col)).localCheckpoint()
+    syms = cut(_initial_symbols(word_freqs(docs, text_col, id_col)))
     return spark.createDataFrame(
         _merge_loop(syms, num_merges, min_pair_count), MERGES_SCHEMA
     )
@@ -176,7 +176,7 @@ def _merge_loop(
                 break
             lhs, rhs, cnt = best[0]["sym"], best[0]["nxt"], int(best[0]["cnt"])
             merges.append((step, lhs, rhs, cnt))
-            nxt_state = _apply_merge(syms, lhs, rhs).localCheckpoint()
+            nxt_state = cut(_apply_merge(syms, lhs, rhs))
             syms.unpersist()
             syms = nxt_state
     finally:
@@ -305,7 +305,7 @@ def wordpiece_train(
     not modeled — symbols are plain substrings (documented deviation;
     it affects rendering, not segmentation)."""
     spark = docs.sparkSession
-    syms = _initial_symbols(word_freqs(docs, text_col, id_col)).localCheckpoint()
+    syms = cut(_initial_symbols(word_freqs(docs, text_col, id_col)))
     merges: list[tuple[int, str, str, int, float]] = []
     try:
         for step in range(num_merges):
@@ -337,7 +337,7 @@ def wordpiece_train(
                 break
             lhs, rhs = best[0]["sym"], best[0]["nxt"]
             merges.append((step, lhs, rhs, int(best[0]["cnt"]), float(best[0]["score"])))
-            nxt_state = _apply_merge(syms, lhs, rhs).localCheckpoint()
+            nxt_state = cut(_apply_merge(syms, lhs, rhs))
             syms.unpersist()
             syms = nxt_state
     finally:
@@ -470,7 +470,7 @@ def bytebpe_train(
     not the regex, is the operator under test). Same scale shape: one
     corpus scan, vocabulary-bounded rounds, 1-row argmax."""
     spark = docs.sparkSession
-    syms = _initial_byte_symbols(word_freqs(docs, text_col, id_col)).localCheckpoint()
+    syms = cut(_initial_byte_symbols(word_freqs(docs, text_col, id_col)))
     return spark.createDataFrame(
         _merge_loop(syms, num_merges, min_pair_count), MERGES_SCHEMA
     )

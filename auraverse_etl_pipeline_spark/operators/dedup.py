@@ -27,7 +27,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 
 from auraverse_etl_pipeline_spark.functions.text import tokens
-from auraverse_etl_pipeline_spark.operators.caching import release_after
+from auraverse_etl_pipeline_spark.operators.caching import cut, release_after
 
 
 def exact_duplicate_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -559,7 +559,6 @@ def drop_near_duplicates_by_cluster(
 def connected_component_labels(
     pairs: DataFrame,
     id_col: str = "doc_id",
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph: every
     vertex gets ``component`` = the smallest id reachable from it, so a
@@ -580,21 +579,8 @@ def connected_component_labels(
     At 1000-executor scale this is the standard Pregel-style CC with
     the two-phase shortcut of large-star/small-star algorithms.
 
-    ``reliable`` picks the checkpoint flavor. ``localCheckpoint``
-    (default on sessions with no checkpoint dir) writes round blocks to
-    executor-local storage — fine single-node, but on a real cluster
-    one lost executor invalidates a round's blocks and kills the
-    iterative job mid-flight. ``reliable=True`` (the 100 TB spelling,
-    and the default whenever ``SparkContext.setCheckpointDir`` has
-    been configured) uses fault-tolerant ``checkpoint()`` against that
-    directory instead, so the job survives executor loss at the cost
-    of a distributed write per round."""
-    if reliable is None:
-        reliable = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-
+    Each round's checkpoint is :func:`~auraverse_etl_pipeline_spark.
+    operators.caching.cut` (fault-tolerant when a checkpoint dir is set)."""
     # cache the pair list first: the bidirectional union consumes it
     # twice, and upstream pair generation (a shingle self-join) is the
     # expensive part of the whole operator
@@ -605,7 +591,7 @@ def connected_component_labels(
         .distinct()
         .cache()
     )
-    labels = _materialize(
+    labels = cut(
         edges.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
     )
     # Convergence probe: labels are monotonically non-increasing, so the
@@ -630,7 +616,7 @@ def connected_component_labels(
         lookup = pulled.select(
             F.col("id").alias("cid"), F.col("component").alias("cc")
         )
-        new_labels = _materialize(
+        new_labels = cut(
             pulled.join(lookup, pulled.component == lookup.cid, "left")
             .select("id", F.coalesce("cc", "component").alias("component"))
         )

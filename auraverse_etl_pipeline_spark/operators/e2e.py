@@ -27,9 +27,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from auraverse_etl_pipeline_spark.operators.caching import release_after
+from auraverse_etl_pipeline_spark.operators.caching import cut, release_after
 from auraverse_etl_pipeline_spark.operators.lm import LM_XENT_MAX
-from auraverse_etl_pipeline_spark.operators.retire import _checkpoint
 
 
 def crawl_to_corpus_funnel(
@@ -166,7 +165,7 @@ def crawl_to_corpus_funnel(
                 "",
             ).alias("text")
         )
-        # EAGER localCheckpoint, not .cache() (optimization r17): this
+        # EAGER cut, not .cache() (optimization r17): this
         # is the documented parquet-checkpoint boundary of a real run,
         # and the in-memory spelling that actually matches it is the
         # lineage CUT — a .cache() leaves the warc+detector logical
@@ -174,11 +173,8 @@ def crawl_to_corpus_funnel(
         # re-analyzes it once per action (measured: ~6 s of pure
         # driver-side plan analysis per warm funnel run, §7.3's
         # planning-time trap). The detector output is deterministic,
-        # so the cut changes no rows. Auto-upgrades to the reliable
-        # checkpoint dir when one is configured (retire.py discipline
-        # — executor-local blocks die with their executor at cluster
-        # scale; localCheckpoint stays the local-mode default).
-        .transform(lambda d: _checkpoint(d, d.sparkSession, None))
+        # so the cut changes no rows.
+        .transform(cut)
     )
 
     # Fixed-width per-doc flags (text dropped before caching). The
@@ -201,9 +197,8 @@ def crawl_to_corpus_funnel(
     # gopher/lang/md5/sha2 expression forest — the second lineage cut
     # (optimization r17): a .cache() would re-run Catalyst analysis of
     # that forest under every downstream action (same §7.3 trap as the
-    # redocs boundary). Fixed-width rows, deterministic content; same
-    # reliable auto-upgrade as the redocs cut.
-    flags = _checkpoint(flags, flags.sparkSession, None)
+    # redocs boundary). Fixed-width rows, deterministic content.
+    flags = cut(flags)
     canon = (
         flags.filter("domain_ok").groupBy("h").agg(F.min("doc_id").alias("keep_id"))
     )
@@ -238,15 +233,14 @@ def crawl_to_corpus_funnel(
     # a .cache() would leave the whole LM-scoring forest (model
     # aggregates + transition explode over stage-6 survivors) embedded
     # as the cached subtree's logical plan, re-analyzed per consumer.
-    # Fixed-width rows, deterministic content; reliable auto-upgrade
-    # as the other cuts.
+    # Fixed-width rows, deterministic content.
     scores = lm_out.select(
         F.col("id").alias("doc_id"),
         (F.col("xent").isNotNull() & (F.col("xent") <= F.lit(float(xent_max)))).alias(
             "fluent"
         ),
     )
-    scores = _checkpoint(scores, scores.sparkSession, None)
+    scores = cut(scores)
     s6 = s5.join(scores.filter("fluent").select("doc_id"), "doc_id")
 
     # Stage 8: near-dedup among stage-7 survivors (keep-first edge rule).
@@ -431,15 +425,12 @@ def corpus_to_chunk_index(
     # the final assignment and the search's in-cell scan each
     # re-ANALYZE whatever logical tree sits here — a .cache() leaves
     # the chunk explode + embedding aggregate embedded in all of them,
-    # a localCheckpoint truncates it (deterministic content, same
-    # rows).
-    # (auto-upgrades to the reliable checkpoint dir when configured —
-    # the retire.py discipline)
+    # a cut truncates it (deterministic content, same rows).
     cvec = (
         hashed_embeddings(chunks, dim=dim, id_col="chunk_id")
         .filter(F.col("norm") > 0)
         .select(F.col("id").alias("vec_id"), F.col("embedding"))
-        .transform(lambda d: _checkpoint(d, d.sparkSession, None))
+        .transform(cut)
     )
     qvec = (
         hashed_embeddings(queries, dim=dim)

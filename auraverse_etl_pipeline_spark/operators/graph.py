@@ -26,6 +26,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from auraverse_etl_pipeline_spark.operators.caching import cut
+
 
 def pagerank(
     edges: DataFrame,
@@ -48,9 +50,8 @@ def pagerank(
     built once and cached; each round is ONE join of edges against the
     node-sized rank table plus one partial-aggregated sum keyed by
     destination — state never exceeds the vertex set, and lineage is
-    cut per round with ``localCheckpoint`` (the connected-components
-    discipline). ``iterations`` is the cost knob; the graph is read
-    once."""
+    cut per round (``cut``, the connected-components discipline).
+    ``iterations`` is the cost knob; the graph is read once."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
     if undirected:
         e = e.unionByName(
@@ -61,17 +62,16 @@ def pagerank(
     ncount = F.broadcast(
         e2.select("src").distinct().agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    ranks = (
+    ranks = cut(
         e2.select("src")
         .distinct()
         .crossJoin(ncount)
         .select(F.col("src").alias("node"), (F.lit(1.0) / F.col("n")).alias("rank"))
-        .localCheckpoint()
     )
     teleport = 1.0 - damping
     try:
         for _ in range(iterations):
-            nxt = (
+            nxt = cut(
                 e2.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
                 .groupBy("dst")
                 .agg(
@@ -86,7 +86,6 @@ def pagerank(
                         "rank"
                     ),
                 )
-                .localCheckpoint()
             )
             ranks.unpersist()
             ranks = nxt

@@ -27,7 +27,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from auraverse_etl_pipeline_spark.operators.caching import release_after
+from auraverse_etl_pipeline_spark.operators.caching import cut, release_after
 from auraverse_etl_pipeline_spark.operators.classifier import _ln
 from auraverse_etl_pipeline_spark.runtime import ship_package
 
@@ -315,8 +315,8 @@ def _fused_scoring_frames(lm: BigramLm) -> tuple[DataFrame, DataFrame | None]:
 
 
 def prepare_scoring_frames(lm: BigramLm) -> BigramLm:
-    """Materialize the fused scoring frames ONCE (eager checkpoint —
-    auto-upgraded to the reliable checkpoint dir when configured) and
+    """Materialize the fused scoring frames ONCE (eager :func:`~
+    auraverse_etl_pipeline_spark.operators.caching.cut`) and
     return a BigramLm carrying them. For scorers that call
     :func:`ngram_lm_score` repeatedly against one frozen model (the
     streaming gate's per-micro-batch scoring), the model-table
@@ -324,11 +324,6 @@ def prepare_scoring_frames(lm: BigramLm) -> BigramLm:
     One-shot scorers should NOT call this: the lazy build folds into
     their single action, and the eager cut would only add jobs."""
     m2, m3 = _fused_scoring_frames(lm)
-    spark = m2.sparkSession
-    if spark.sparkContext.getCheckpointDir() is not None:
-        cut = lambda d: d.checkpoint(eager=True)  # noqa: E731
-    else:
-        cut = lambda d: d.localCheckpoint(eager=True)  # noqa: E731
     return BigramLm(
         bigrams=lm.bigrams,
         contexts=lm.contexts,

@@ -21,12 +21,14 @@ and each rewrites only what the retired ids actually touch:
   df=0 drop, so the result is indistinguishable from a rebuild without
   the retired docs), 1-row stats subtraction.
 - :func:`bm25_retire_path` — the persisted spelling: load → retire →
-  write, in place behind the reliable-checkpoint cut or to a fresh
+  write, in place behind the checkpoint cut or to a fresh
   ``dst_path`` (the production swap).
 - :func:`log_retire` — drop the retired ids' rows from an append-only
   decision/frontier log, with the ``compact_decisions`` in-place
-  overwrite discipline (eager checkpoint before the destructive write,
-  ``reliable=True`` for the fault-tolerant flavor).
+  overwrite discipline (eager checkpoint before the destructive write).
+
+Every read-then-overwrite cut here is
+:func:`~auraverse_etl_pipeline_spark.operators.caching.cut`.
 
 Idempotence and crash posture: every function anti-joins a DURABLE
 tombstone list the caller owns, so a re-run after any crash converges
@@ -47,6 +49,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from auraverse_etl_pipeline_spark.operators.caching import cut
 from auraverse_etl_pipeline_spark.operators.retrieval import Bm25Index
 
 
@@ -54,18 +57,6 @@ def _tomb_ids(tombstones: DataFrame, id_col: str) -> DataFrame:
     """Normalized one-column distinct tombstone frame, broadcast: a
     take-down list is human-scale (thousands), never corpus-scale."""
     return F.broadcast(tombstones.select(F.col(id_col).alias(id_col)).distinct())
-
-
-def _checkpoint(df: DataFrame, spark: SparkSession, reliable: bool | None) -> DataFrame:
-    """The read-then-overwrite lineage cut (compact_decisions rule):
-    survivors derive from scanning the very files the write replaces,
-    so they must materialize first. ``reliable=None`` auto-upgrades to
-    the fault-tolerant SparkContext checkpoint dir when one is
-    configured — during the destructive overwrite, localCheckpoint
-    blocks are executor-local and one lost executor loses the data."""
-    if reliable is None:
-        reliable = spark.sparkContext.getCheckpointDir() is not None
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
@@ -80,7 +71,6 @@ def ivf_retire(
     tombstones: DataFrame,
     members_table: str = "members",
     id_col: str = "id",
-    reliable: bool | None = None,
 ) -> list[int]:
     """Remove retired ids from a cell-partitioned IVF members table,
     rewriting ONLY the partitions that contain one.
@@ -145,7 +135,7 @@ def ivf_retire(
         )
         # the read-then-overwrite lineage cut: the delta derives from
         # the very partition files the dynamic overwrite replaces
-        delta = _checkpoint(survivors.repartition("cell"), spark, reliable)
+        delta = cut(survivors.repartition("cell"))
         (
             delta.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -230,7 +220,6 @@ def bm25_retire_path(
     tombstones: DataFrame,
     id_col: str = "id",
     dst_path: str | None = None,
-    reliable: bool | None = None,
 ) -> Bm25Index:
     """Persisted-index retire: load, :func:`bm25_retire`, write, return
     the index read back from its final path (the caller sees exactly
@@ -240,18 +229,18 @@ def bm25_retire_path(
     fresh and swap, keeping the old one until readers drain. In-place
     (``dst_path=None``) eagerly checkpoints all three tables first
     (they derive from the very files the write replaces — the
-    read-then-overwrite cut), reliable-flavored when a checkpoint dir
-    is configured. BM25 postings cluster by term, not id, so a retire
-    is a full-table rewrite either way — which is why production rides
-    it along with the compaction pass it costs the same as."""
+    read-then-overwrite cut). BM25 postings cluster by term, not id,
+    so a retire is a full-table rewrite either way — which is why
+    production rides it along with the compaction pass it costs the
+    same as."""
     idx = Bm25Index.load(spark, index_path)
     retired = bm25_retire(idx, tombstones, id_col=id_col, cache=True)
     out = dst_path or index_path
     if dst_path is None:
         retired = Bm25Index(
-            postings=_checkpoint(retired.postings, spark, reliable),
-            dfs=_checkpoint(retired.dfs, spark, reliable),
-            stats=_checkpoint(retired.stats, spark, reliable),
+            postings=cut(retired.postings),
+            dfs=cut(retired.dfs),
+            stats=cut(retired.stats),
             cache_handle=retired.cache_handle,
         )
     retired.save(out)
@@ -266,7 +255,6 @@ def log_retire(
     tombstones: DataFrame,
     id_col: str = "id",
     dst_path: str | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Erase every row of a retired id from an append-only decision /
     verdict / frontier log — the take-down twin of
@@ -277,8 +265,8 @@ def log_retire(
     A decisions row links an id to a verdict and a frontier row links
     a canonical URL to its first fetch — under erasure requests the
     linkage itself must go, not just the indexed content. One
-    broadcast anti-join, eager (reliable-flavored) checkpoint before
-    the in-place overwrite, or a fresh ``dst_path`` for the swap
+    broadcast anti-join, eager checkpoint before the in-place
+    overwrite, or a fresh ``dst_path`` for the swap
     spelling. Returns the surviving log read back from disk when a
     rewrite happened, and ``None`` on the short-circuit path (advice
     r15: the caller must be able to tell "nothing rewrote" without
@@ -307,7 +295,7 @@ def log_retire(
     kept = log.join(tomb, id_col, "left_anti")
     out = dst_path or log_path
     if dst_path is None:
-        kept = _checkpoint(kept, spark, reliable)
+        kept = cut(kept)
     kept.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -318,7 +306,6 @@ def retire_ids_everywhere(
     index_paths: "tuple[str, ...] | list[str]" = (),
     bm25_paths: "tuple[str, ...] | list[str]" = (),
     log_paths: "tuple[tuple[str, str], ...] | list[tuple[str, str]]" = (),
-    reliable: bool | None = None,
 ) -> dict[str, list[str]]:
     """One take-down request, ONE command: sweep a single durable
     tombstone table across EVERY persisted loop surface the engine
@@ -361,9 +348,7 @@ def retire_ids_everywhere(
                 spark.read.parquet(f"{root}/{table}")
             except AnalysisException:
                 continue
-            if ivf_retire(
-                spark, root, tombstones, members_table=table, reliable=reliable
-            ):
+            if ivf_retire(spark, root, tombstones, members_table=table):
                 touched.append(table)
         try:
             spark.read.parquet(f"{root}/encode_log")
@@ -371,8 +356,7 @@ def retire_ids_everywhere(
         except AnalysisException:
             has_log = False
         if has_log and (
-            log_retire(spark, f"{root}/encode_log", tombstones, reliable=reliable)
-            is not None
+            log_retire(spark, f"{root}/encode_log", tombstones) is not None
         ):
             touched.append("encode_log")
         summary[root] = touched
@@ -392,12 +376,9 @@ def retire_ids_everywhere(
         ).count() == 0:
             summary[root] = []
             continue
-        bm25_retire_path(spark, root, tombstones, reliable=reliable)
+        bm25_retire_path(spark, root, tombstones)
         summary[root] = ["postings", "dfs", "stats"]
     for path, id_col in log_paths:
-        rewrote = (
-            log_retire(spark, path, tombstones, id_col=id_col, reliable=reliable)
-            is not None
-        )
+        rewrote = log_retire(spark, path, tombstones, id_col=id_col) is not None
         summary[path] = ["log"] if rewrote else []
     return summary

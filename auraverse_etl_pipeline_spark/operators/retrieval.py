@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from auraverse_etl_pipeline_spark.operators.caching import release_after
+from auraverse_etl_pipeline_spark.operators.caching import release_after, run_jobs
 from auraverse_etl_pipeline_spark.runtime import ship_package
 
 #: Lucene's BM25 defaults; shared with the oracle SQL in
@@ -78,8 +78,6 @@ class Bm25Index:
     cache_handle: DataFrame | None = None
 
     def save(self, path: str, mode: str = "overwrite") -> "Bm25Index":
-        from concurrent.futures import ThreadPoolExecutor
-
         # three independent tables — overlapped writes (guide §2.6);
         # the 1-row stats table additionally coalesces to one file
         # (a multi-task commit of a single row is pure overhead)
@@ -94,9 +92,7 @@ class Bm25Index:
                 f"{path}/stats"
             ),
         ]
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            for fut in [pool.submit(j) for j in jobs]:
-                fut.result()
+        run_jobs(jobs)
         return self
 
     @classmethod

@@ -558,7 +558,7 @@ class IvfIndex:
     assignments: DataFrame
 
     def save(self, path: str, mode: str = "overwrite") -> "IvfIndex":
-        from concurrent.futures import ThreadPoolExecutor
+        from auraverse_etl_pipeline_spark.operators.caching import run_jobs
 
         def _centroids() -> None:
             # model-sized by definition (nlist rows): one output file,
@@ -584,9 +584,7 @@ class IvfIndex:
 
         # independent tables — overlapped writes (guide §2.6): the
         # tiny centroids job rides the assignments write's task tail
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_centroids), pool.submit(_assignments)]:
-                fut.result()
+        run_jobs([_centroids, _assignments])
         return self
 
     @classmethod

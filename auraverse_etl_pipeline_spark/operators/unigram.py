@@ -22,7 +22,7 @@ seed pieces, DP position states, usage counts, the model — is
 vocabulary- or model-bounded, never corpus-bounded. Per EM round the
 Viterbi DP is ``max_word_len`` rounds of (vocabulary-sized rows ×
 broadcast model) joins + one max_by aggregate each; lineage is cut per
-round with an eager ``localCheckpoint`` on the model-sized state.
+round with an eager ``cut`` on the model-sized state.
 Encoding re-runs the same DP once and re-joins per-word segmentations
 to the token stream (corpus-sized, but fixed-width rows — the text
 itself never shuffles).
@@ -46,7 +46,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from auraverse_etl_pipeline_spark.operators.caching import release_after
+from auraverse_etl_pipeline_spark.operators.caching import cut, release_after
 from auraverse_etl_pipeline_spark.operators.classifier import _ln
 from auraverse_etl_pipeline_spark.runtime import ship_package
 
@@ -281,7 +281,7 @@ def unigram_train(
     segment the word vocabulary, re-count piece usage with the add-one
     character floor, renormalize) → prune to ``vocab_size`` keeping all
     single characters plus the top multi-char pieces by (cnt DESC,
-    piece ASC) → final renormalize. The model is localCheckpointed
+    piece ASC) → final renormalize. The model is cut
     per round (the BPE lineage-cut discipline) so the returned plan is
     model-sized with no corpus lineage."""
     words = word_table(docs, max_word_len=max_word_len, text_col=text_col).cache()
@@ -291,7 +291,7 @@ def unigram_train(
         )
     finally:
         # bpe_train/wordpiece_train discipline: a failed mid-EM job
-        # (e.g. a localCheckpoint error) must not leak the words cache.
+        # (e.g. a checkpoint error) must not leak the words cache.
         words.unpersist()
 
 
@@ -303,11 +303,11 @@ def _unigram_train_cached(
     max_word_len: int,
     min_count: int,
 ) -> DataFrame:
-    model = _with_logp(seed_counts(words, max_piece_len, min_count)).localCheckpoint()
+    model = cut(_with_logp(seed_counts(words, max_piece_len, min_count)))
     for _ in range(em_iters):
         seg = viterbi_segment(words, model, max_piece_len, max_word_len)
         try:
-            model = _with_logp(_char_floor_counts(seg, words)).localCheckpoint()
+            model = cut(_with_logp(_char_floor_counts(seg, words)))
         finally:
             seg.release_caches()
     # prune: all single chars + top (vocab_size − n_chars) multi-char
@@ -329,7 +329,7 @@ def _unigram_train_cached(
         .select("piece", "cnt")
     )
     kept = model.filter(F.length("piece") == 1).select("piece", "cnt").unionByName(multi)
-    return _with_logp(kept).localCheckpoint()
+    return cut(_with_logp(kept))
 
 
 def unigram_encode(

@@ -15,6 +15,8 @@ and the approximate sketches (error bounds pinned by pytest).
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
@@ -32,7 +34,7 @@ from auraverse_etl_pipeline_spark.operators.bloom import (
     BLOCKLIST_NUM_BITS,
     BLOCKLIST_NUM_HASHES,
 )
-from auraverse_etl_pipeline_spark.operators.caching import release_after
+from auraverse_etl_pipeline_spark.operators.caching import cut, release_after, run_jobs
 from auraverse_etl_pipeline_spark.operators.quality import (
     gopher_fail_reason_sql as _gopher_fail_reason_sql,
     gopher_keep_sql as _gopher_keep_sql,
@@ -980,8 +982,6 @@ def _staged_ivf_fixture(spark: SparkSession, sf_dir: str, *groups: str) -> str:
             # overhead, not bytes (it polluted whichever query's sweep
             # slot touched the group first — measured 17.9 s cold,
             # ~9 s after this change)
-            from concurrent.futures import ThreadPoolExecutor
-
             jobs = [
                 lambda: cb.coalesce(1)
                 .write.mode("overwrite")
@@ -1006,9 +1006,7 @@ def _staged_ivf_fixture(spark: SparkSession, sf_dir: str, *groups: str) -> str:
                 .partitionBy("cell")
                 .parquet(f"{croot}/sq_codes"),
             ]
-            with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-                for fut in [pool.submit(j) for j in jobs]:
-                    fut.result()
+            run_jobs(jobs)
             handle.unpersist()
         else:  # pragma: no cover - registry-internal contract
             raise ValueError(f"unknown fixture group: {group}")
@@ -1020,14 +1018,7 @@ def _staged_ivf_fixture(spark: SparkSession, sf_dir: str, *groups: str) -> str:
     # sim_index_fsck's first touch stages three groups, and their
     # write-commit tails otherwise serialize ~9 s each
     todo = [g for g in dict.fromkeys(groups) if (sf_dir, g) not in _IVF_FIXTURE_STAGED]
-    if len(todo) == 1:
-        _stage(todo[0])
-    elif todo:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(todo)) as pool:
-            for fut in [pool.submit(_stage, g) for g in todo]:
-                fut.result()
+    run_jobs([partial(_stage, g) for g in todo])
     return root
 
 
@@ -5728,18 +5719,32 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_bm25_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from auraverse_etl_pipeline_spark.operators.retrieval import (
+        Bm25Index,
         bm25_index,
         bm25_merge,
     )
 
-    from auraverse_etl_pipeline_spark.operators.retrieval import Bm25Index
+    def _index_of(postings: DataFrame) -> Bm25Index:
+        # the df and stats tables, re-derived from (term, id, tf, dl)
+        return Bm25Index(
+            postings=postings,
+            dfs=postings.groupBy("term").agg(
+                F.count(F.lit(1)).cast("bigint").alias("df")
+            ),
+            stats=postings.groupBy("id")
+            .agg(F.max("dl").alias("dl"))
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                F.sum("dl").cast("bigint").alias("total_len"),
+            ),
+        )
 
     docs = load_table(spark, sf_dir, "documents")
     # one tokenize for both sides: the batch re-ingests everything, and
     # day-1's independently-built index equals the batch index filtered
     # to day-1 ids (same texts), so derive it from the SAME materialized
     # postings — a real daily loop LOADS both as parquet scans instead.
-    # EAGER localCheckpoint, not .persist() (optimization r18, the
+    # EAGER cut, not .persist() (optimization r18, the
     # funnel's lineage-cut rule): everything downstream — day-1's
     # filtered tables, the merge anti-join, the postings union, the
     # roll — derives from this ONE frame, and a cache leaves the
@@ -5748,23 +5753,14 @@ def text_bm25_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut stands in for the parquet scan of a real daily loop. The
     # internal (id, term, tf) cache is consumed only inside this
     # materialization (tf side + dl side), so it releases right here
-    # instead of riding the returned frame's handle.
+    # instead of riding the returned frame's handle; both indexes'
+    # df and stats tables derive from the cut postings, not from the
+    # released tf.
     built = bm25_index(docs, cache=True)  # re-ingests day1 + new docs
-    postings = built.postings.localCheckpoint()
+    postings = cut(built.postings)
     built.cache_handle.unpersist()
-    batch = Bm25Index(postings=postings, dfs=built.dfs, stats=built.stats)
     p1 = postings.filter(F.col("id") % 3 != 0).persist()
-    idx1 = Bm25Index(
-        postings=p1,
-        dfs=p1.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df")),
-        stats=p1.groupBy("id")
-        .agg(F.max("dl").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("dl").cast("bigint").alias("total_len"),
-        ),
-    )
-    merged = bm25_merge(idx1, batch)
+    merged = bm25_merge(_index_of(p1), _index_of(postings))
     roll = merged.postings.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("df_postings"),
         F.sum("tf").cast("bigint").alias("total_tf"),
@@ -6273,7 +6269,7 @@ def sim_retrieval_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     qfilter = F.col("doc_id").isin(*_HYBRID_QUERY_IDS)
     idx = bm25_index(corpus, cache=True)
     # lex feeds the fused ranking AND its own run row; dense feeds the
-    # fusion, its run row, AND the truth grades. EAGER localCheckpoint,
+    # fusion, its run row, AND the truth grades. EAGER cut,
     # not .cache() (optimization r18 — the crawl funnel's lineage-cut
     # rule): both frames are queries×k rows, but a .cache() leaves the
     # whole retrieval forest (tokenize+postings aggregate on the lex
@@ -6285,18 +6281,16 @@ def sim_retrieval_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both rankers tie-break on doc_id). The bm25 tf cache stays a
     # cache — it is consumed only inside lex's one materialization —
     # and releases through the handle below.
-    lex = (
+    lex = cut(
         bm25_search(
             corpus.filter(qfilter).select(
                 F.col("doc_id").alias("query_id"), "text"
             ),
             idx,
             k=20,
-        )
-        .select("query_id", "doc_id", "rank")
-        .localCheckpoint()
+        ).select("query_id", "doc_id", "rank")
     )
-    dense = (
+    dense = cut(
         cosine_top_k(
             corpus.select(F.col("doc_id").alias("vec_id"), "embedding"),
             corpus.filter(qfilter).select(
@@ -6306,7 +6300,6 @@ def sim_retrieval_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_fold=True,
         )
         .select("query_id", F.col("neighbor_id").alias("doc_id"), "rank")
-        .localCheckpoint()
     )
     hybrid = hybrid_rrf(lex, dense, k=10, rrf_k=_RRF_K).select(
         "query_id", "doc_id", "rank"

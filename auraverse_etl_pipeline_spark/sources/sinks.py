@@ -24,6 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import pandas_udf
 
+from auraverse_etl_pipeline_spark.operators.caching import cut
+
 
 def write_json(
     df: DataFrame,
@@ -110,7 +112,6 @@ def compact_decisions(
     max_records_per_file: int = 1_000_000,
     compression: str = "zstd",
     keep: str = "latest",
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Retention compaction for append-only decision/verdict logs —
     the missing maintenance pass behind the streaming gates (every
@@ -135,17 +136,8 @@ def compact_decisions(
     tests/test_streaming.py). A production pipeline at real scale
     compacts to a fresh ``dst_path`` and swaps, keeping the old log
     until readers drain; in-place is the single-writer spelling.
-
-    ``reliable`` picks the in-place checkpoint flavor (the
-    :func:`~auraverse_etl_pipeline_spark.operators.dedup.
-    connected_component_labels` contract): ``localCheckpoint`` blocks
-    are executor-local, so during the destructive in-place overwrite
-    they are the ONLY copy of the log and one lost executor loses it.
-    ``reliable=True`` — the 100 TB spelling, and the default whenever
-    ``SparkContext.setCheckpointDir`` is configured — materializes the
-    survivors to the fault-tolerant checkpoint dir first, so the
-    overwrite never depends on executor liveness. Ignored when
-    ``dst_path`` is given (nothing is destroyed, no cut needed).
+    The in-place checkpoint is :func:`~auraverse_etl_pipeline_spark.
+    operators.caching.cut` (fault-tolerant when a checkpoint dir is set).
 
     ``keep`` picks the retention rule per log family: ``"latest"``
     (``max_by`` — the gates' re-score semantics) or ``"earliest"``
@@ -172,13 +164,7 @@ def compact_decisions(
         latest = latest.repartition(*partition_by)
     out = dst_path or decisions_path
     if dst_path is None:
-        if reliable is None:
-            reliable = spark.sparkContext.getCheckpointDir() is not None
-        latest = (
-            latest.checkpoint(eager=True)
-            if reliable
-            else latest.localCheckpoint(eager=True)
-        )
+        latest = cut(latest)
     w = (
         latest.write.mode("overwrite")
         .option("compression", compression)

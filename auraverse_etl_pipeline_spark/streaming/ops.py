@@ -17,6 +17,7 @@ in a continuous deployment.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -33,25 +34,12 @@ from auraverse_etl_pipeline_spark.operators.bloom import (
     BLOCKLIST_NUM_BITS,
     BLOCKLIST_NUM_HASHES,
 )
+from auraverse_etl_pipeline_spark.operators.caching import cut, run_jobs
 from auraverse_etl_pipeline_spark.plans.analytics import dsum
 from auraverse_etl_pipeline_spark.streaming.runner import (
     audit_batch_plan,
     audit_stream_plan,
 )
-
-
-def _cut(df: DataFrame) -> DataFrame:
-    """Eager lineage cut with the operators/retire.py ``_checkpoint``
-    auto-upgrade (optimization r18): every per-batch gate delta and
-    staged-commit frame below derives from a scan of the very path its
-    write replaces or appends into, so it must materialize first — and
-    ``localCheckpoint`` blocks are executor-local (they die with their
-    executor, failing the job instead of recomputing). On ``local[N]``
-    nothing changes; when a fault-tolerant SparkContext checkpoint dir
-    is configured, the cut lands there instead."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def windowed_event_counts(
@@ -509,7 +497,7 @@ def run_stream_substring_gate(
         )
         # decisions are consumed twice (the sink and the admit filter)
         # and derive from the index read — cut once, eagerly
-        decisions = _cut(decisions)
+        decisions = cut(decisions)
         audit_batch_plan("substring_gate:decisions", decisions)
         decisions.write.mode("append").parquet(decisions_path)
         admitted = batch_df.join(
@@ -641,7 +629,7 @@ def run_stream_bm25_indexing(
         # auto-refreshes cached plans that read index_path, so a cached
         # delta would recompute against the new listing — and anti-join
         # away the very docs it just wrote — before the df/stats writes.
-        delta = _cut(delta)
+        delta = cut(delta)
         audit_batch_plan("bm25_indexing:postings", delta)
         delta.write.mode("append").parquet(f"{index_path}/postings")
         dfs = delta.groupBy("term").agg(
@@ -762,7 +750,7 @@ def run_stream_ivf_assign(
         # cluster by cell before the partitioned append (one writer per
         # cell per task, ~one file per cell per batch — the IvfIndex.save
         # rule; an unclustered write is tasks × cells open buffers)
-        delta = _cut(delta.repartition("cell"))
+        delta = cut(delta.repartition("cell"))
         audit_batch_plan("ivf_assign:delta", delta)
         delta.write.mode("append").partitionBy("cell").parquet(
             f"{index_path}/assignments"
@@ -1032,8 +1020,7 @@ def run_stream_semdedup_gate(
     6. ONE eager checkpoint of the batch's full VERDICT set (it
        derives from a scan of the very path the member append below
        changes — the lineage-cut gotcha pinned in
-       tests/test_streaming.py; auto-upgrades to the reliable
-       checkpoint dir when configured), then append the survivors to
+       tests/test_streaming.py; ``cut``), then append the survivors to
        ``{index_path}/members`` (partitioned by cell) FIRST and every
        verdict to ``{index_path}/decisions`` after. Members-first is
        the gate's crash posture (optimization r18, restoring the
@@ -1162,11 +1149,8 @@ def run_stream_semdedup_gate(
         # append crash heals invisibly on re-ingest instead of
         # manufacturing a permanent kept_decision_without_member alarm
         # for the wrong root cause (round-17 verdict, "what's wrong"
-        # #2; pinned in tests/test_streaming.py). Auto-upgrades to the
-        # fault-tolerant checkpoint dir when one is configured (the
-        # operators/retire.py discipline — executor-local blocks die
-        # with their executor at cluster scale).
-        verdicts = _cut(verdicts)
+        # #2; pinned in tests/test_streaming.py).
+        verdicts = cut(verdicts)
         decisions = verdicts.select(
             "id", "cell", "centroid_cos", (F.col("reason") == "kept").alias("kept"),
             "reason",
@@ -1263,7 +1247,7 @@ def run_stream_url_frontier(
             seen = None
         if seen is not None:
             firsts = firsts.join(seen.distinct(), "canon_url", "left_anti")
-        delta = _cut(firsts)
+        delta = cut(firsts)
         audit_batch_plan("url_frontier:delta", delta)
         delta.write.mode("append").parquet(frontier_path)
 
@@ -1561,7 +1545,7 @@ def gate_maintenance_tick(
         )
         if flagged:
             consumed = decisions.agg(F.max("batch_id").alias("batch_id"))
-            consumed = _cut(consumed)
+            consumed = cut(consumed)
             moved = retrain_gate_index(
                 spark, index_path, nlist=nlist, max_iter=max_iter, dim=dim
             )
@@ -1589,7 +1573,6 @@ def retrain_gate_index(
     nlist: int | None = None,
     max_iter: int = 2,
     dim: int | None = None,
-    reliable: bool | None = None,
     members_table: str = "members",
 ) -> int:
     """Re-FIT the gate index's coarse quantizer over its current
@@ -1615,10 +1598,10 @@ def retrain_gate_index(
     the NEXT drift audit trends against the new geometry's scores.
 
     Crash posture (documented, not staged): the members delta is
-    materialized behind the checkpoint cut (``reliable=True`` for the
-    fault-tolerant flavor — the in-place full overwrite destroys the
-    only other copy) and written BEFORE the centroids. A crash
-    between the two writes leaves new cell labels under old centroids
+    materialized behind the checkpoint cut (the in-place full
+    overwrite destroys the only other copy) and written BEFORE the
+    centroids. A crash between the two writes leaves new cell labels
+    under old centroids
     — probes still answer (same cell-id space), recall degraded until
     the next retrain call, which is idempotent and deterministic, so
     re-running converges to the same final state. No member is ever
@@ -1653,22 +1636,19 @@ def retrain_gate_index(
             F.lit(1.0), cosine_similarity_expr("v", "centroid", dim=dim)
         ).alias("centroid_cos"),
     )
-    if reliable is None:
-        reliable = spark.sparkContext.getCheckpointDir() is not None
     # checkpoint FIRST, then count moved off the checkpointed delta
     # (optimization r18, the retrain_pq_index discipline): the full
     # re-assignment — the pass's dominant cost — runs once instead of
     # twice, and the old-labels comparison still materializes to a
     # driver int BEFORE the overwrite destroys its source files
-    delta = relabeled.repartition("cell")
-    delta = delta.checkpoint(eager=True) if reliable else delta.localCheckpoint(eager=True)
+    delta = cut(relabeled.repartition("cell"))
     moved = (
         delta.select("id", F.col("cell").alias("new_cell"))
         .join(members.select("id", "cell"), "id")
         .filter(F.col("new_cell") != F.col("cell"))
         .count()
     )
-    new_cent = _cut(new.centroids)
+    new_cent = cut(new.centroids)
     handle = getattr(new.assignments, "release_caches", None)
     if callable(handle):
         handle()
@@ -1691,7 +1671,6 @@ def retrain_pq_index(
     dim: int | None = None,
     members_table: str = "assignments",
     codes_table: str = "pq_codes",
-    reliable: bool | None = None,
 ) -> int:
     """Re-FIT a persisted PQ index's codebooks over its current member
     vectors and re-encode every code — the compressed-domain twin of
@@ -1743,19 +1722,16 @@ def retrain_pq_index(
         max_iter=max_iter,
         id_col="id",
         vec_col="v",
-    ).transform(_cut)
+    ).transform(cut)
     recoded = pq_encode(
         members, books, m=m, dim=dim, id_col="id", vec_col="v"
     ).join(members.select("id", "cell"), "id")
-    if reliable is None:
-        reliable = spark.sparkContext.getCheckpointDir() is not None
     # checkpoint FIRST, then count moved off the checkpointed delta:
     # the re-encode (the pass's dominant cost at scale) runs once, and
     # the old-codes comparison still materializes to a driver int
     # BEFORE the overwrite destroys its source files (the
     # read-then-overwrite cut)
-    delta = recoded.repartition("cell")
-    delta = delta.checkpoint(eager=True) if reliable else delta.localCheckpoint(eager=True)
+    delta = cut(recoded.repartition("cell"))
     old = spark.read.parquet(f"{index_path}/{codes_table}")
     moved = (
         delta.select("id", "sub", F.col("code").alias("new_code"))
@@ -1779,7 +1755,6 @@ def retrain_sq_index(
     dim: int | None = None,
     members_table: str = "assignments",
     codes_table: str = "sq_codes",
-    reliable: bool | None = None,
 ) -> int:
     """Re-FIT a persisted SQ8 index's per-dimension min/max stats over
     its current members and re-encode every code array — the scalar-
@@ -1810,17 +1785,14 @@ def retrain_sq_index(
     )
 
     members = spark.read.parquet(f"{index_path}/{members_table}")
-    stats = _cut(sq_stats(members, id_col="id", vec_col="v"))
+    stats = cut(sq_stats(members, id_col="id", vec_col="v"))
     recoded = sq_encode(
         members, stats, dim=dim, id_col="id", vec_col="v"
     ).join(members.select("id", "cell"), "id")
-    if reliable is None:
-        reliable = spark.sparkContext.getCheckpointDir() is not None
     # checkpoint first, count moved off the checkpointed delta — one
     # re-encode, and the comparison still materializes before the
     # overwrite (see retrain_pq_index)
-    delta = recoded.repartition("cell")
-    delta = delta.checkpoint(eager=True) if reliable else delta.localCheckpoint(eager=True)
+    delta = cut(recoded.repartition("cell"))
     old = spark.read.parquet(f"{index_path}/{codes_table}")
     moved = (
         delta.select("id", F.col("codes").alias("new_codes"))
@@ -1905,8 +1877,8 @@ def compressed_index_tick(
             # re-run), never a codes-only erase the next re-fit would
             # resurrect. The FOLLOWER surfaces carry no relative order
             # contract among themselves, and each rewrites its own
-            # table — so they run as overlapped jobs from a small
-            # thread pool (guide §2.6): the tail of one surface's
+            # table — so they run as overlapped jobs (``run_jobs``,
+            # guide §2.6): the tail of one surface's
             # rewrite back-fills executors with the next one's scan,
             # and the wall cost of the follower stage drops from the
             # sum to roughly the max.
@@ -1940,13 +1912,9 @@ def compressed_index_tick(
                         return table
                 return None
 
-            from concurrent.futures import ThreadPoolExecutor
-
             followers = ("pq_codes", "sq_codes", "encode_log")
-            with ThreadPoolExecutor(max_workers=len(followers)) as pool:
-                for name in pool.map(_retire_follower, followers):
-                    if name is not None:
-                        retired.append(name)
+            names = run_jobs([partial(_retire_follower, t) for t in followers])
+            retired += [name for name in names if name is not None]
 
     # The PQ and SQ stages read/rewrite DISJOINT table sets (pq_codes/
     # codebooks/encode_log watermark vs sq_codes/sq_stats; both only
@@ -1975,7 +1943,7 @@ def compressed_index_tick(
         if not flagged:
             return False, 0
         consumed = flog.agg(F.max("batch_id").alias("batch_id"))
-        consumed = _cut(consumed)
+        consumed = cut(consumed)
         moved = retrain_pq_index(
             spark, index_path, m=m, ksub=ksub, max_iter=max_iter, dim=dim
         )
@@ -2005,13 +1973,9 @@ def compressed_index_tick(
             return False, 0
         return True, retrain_sq_index(spark, index_path, dim=dim)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        pq_fut = pool.submit(_pq_stage)
-        sq_fut = pool.submit(_sq_stage)
-        pq_retrained, pq_moved = pq_fut.result()
-        sq_retrained, sq_moved = sq_fut.result()
+    (pq_retrained, pq_moved), (sq_retrained, sq_moved) = run_jobs(
+        [_pq_stage, _sq_stage]
+    )
 
     return {
         "retired": retired,
@@ -2139,7 +2103,7 @@ def compressed_index_append(
             )
     # THE read-then-append lineage cut: one assignment pass + every
     # surface probe, materialized before the first write below
-    enriched = _cut(enriched)
+    enriched = cut(enriched)
 
     # ONE counting pass decides every surface's delta size (the four
     # per-surface count/limit(1) actions collapsed): the encoders emit
@@ -2237,7 +2201,6 @@ def bm25_maintenance_tick(
     segments_path: str | None = None,
     tombstones_path: str | None = None,
     dst_path: str | None = None,
-    reliable: bool | None = None,
 ) -> dict:
     """ONE cron-able maintenance tick for a persisted BM25 index — the
     LEXICAL family's composition, completing the tick symmetry
@@ -2283,7 +2246,6 @@ def bm25_maintenance_tick(
     from pyspark.errors.exceptions.captured import AnalysisException
 
     from auraverse_etl_pipeline_spark.operators.retire import (
-        _checkpoint,
         _tomb_ids,
         bm25_retire,
     )
@@ -2369,9 +2331,9 @@ def bm25_maintenance_tick(
     out = dst_path or index_path
     if dst_path is None:
         merged = Bm25Index(
-            postings=_checkpoint(merged.postings, spark, reliable),
-            dfs=_checkpoint(merged.dfs, spark, reliable),
-            stats=_checkpoint(merged.stats, spark, reliable),
+            postings=cut(merged.postings),
+            dfs=cut(merged.dfs),
+            stats=cut(merged.stats),
         )
     merged.save(out)
     if dst_path is None:
@@ -2696,7 +2658,7 @@ def rebalance_gate_index(
                 > 0
             )  # members already carry staged cells -> members write committed
         if promote:
-            _cut(pending).write.mode("overwrite").parquet(
+            cut(pending).write.mode("overwrite").parquet(
                 cent_path
             )
         _delete(pending_path)
@@ -2728,7 +2690,7 @@ def rebalance_gate_index(
             ).alias("centroid_cos"),
         )
     )
-    new_cent = _cut(new.centroids)
+    new_cent = cut(new.centroids)
     # cluster the delta by its partition column BEFORE the partitioned
     # write: without this every task holds an open writer per cell it
     # touches (tasks × cells parquet buffers — measured as a heap OOM
@@ -2736,7 +2698,7 @@ def rebalance_gate_index(
     # cells × tasks small files; repartition("cell") makes it one
     # writer per cell per task and ~one file per cell (the same rule
     # compact_parquet spells with target_partitions + partition_by)
-    delta = _cut(delta.repartition("cell"))
+    delta = cut(delta.repartition("cell"))
     handle = getattr(new.assignments, "release_caches", None)
     if callable(handle):
         handle()

@@ -31,6 +31,20 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A fault-tolerant SparkContext checkpoint dir for one test, so
+    every ``cut`` writes reliable checkpoints there. Teardown restores
+    the suite default (no dir: local checkpoints) for later tests."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    path = str(tmp_path / "ckpt")
+    sc.setCheckpointDir(path)
+    yield path
+    sc._jsc.sc().setCheckpointDir(None)
+    assert sc.getCheckpointDir() is None
+
+
 @pytest.fixture(scope="session")
 def duck(sf_dir):
     """DuckDB connection with every testdata table registered as a view

@@ -4,6 +4,8 @@ spellings."""
 
 from __future__ import annotations
 
+import glob
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -1193,7 +1195,7 @@ def test_connected_components_survive_long_chains(spark):
     assert {r.component for r in out} == {0}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, checkpoint_dir):
     """The cluster-reliable path (fault-tolerant checkpoint() against a
     configured checkpoint dir, instead of executor-local blocks) must
     produce identical labels on the 256-chain, and must be auto-picked
@@ -1206,25 +1208,10 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id1 long, id2 long"
     )
-    sc = spark.sparkContext
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        # reliable=None auto-detects the configured dir -> reliable path
-        out = connected_component_labels(pairs).collect()
-        assert len(out) == n and {r.component for r in out} == {0}
-        out = connected_component_labels(pairs, reliable=True).collect()
-        assert len(out) == n and {r.component for r in out} == {0}
-        # files actually landed in the reliable checkpoint dir
-        assert any((tmp_path / "ckpt").rglob("*"))
-    finally:
-        # session-scoped SparkContext: clear the dir so later tests keep
-        # exercising the localCheckpoint default (best-effort py4j poke)
-        try:
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-                spark._jvm.scala.Option.apply(None)
-            )
-        except Exception:
-            pass
+    out = connected_component_labels(pairs).collect()
+    assert len(out) == n and {r.component for r in out} == {0}
+    # files actually landed in the reliable checkpoint dir
+    assert glob.glob(f"{checkpoint_dir}/*/rdd-*"), "no reliable checkpoint written"
 
 
 def test_merge_into_index_multi_batch(spark, docs):

@@ -210,7 +210,7 @@ def test_bm25_retire_path_inplace_and_swap(spark, tmp_path):
     assert Bm25Index.load(spark, src).stats.collect()[0].n_docs == 3
 
 
-def test_log_retire_inplace_swap_and_reliable(spark, tmp_path):
+def test_log_retire_inplace_swap_and_reliable(spark, tmp_path, checkpoint_dir):
     path = str(tmp_path / "decisions")
     spark.createDataFrame(
         [(i, 1, i % 2 == 0) for i in range(1, 7)], "id bigint, batch_id bigint, kept boolean"
@@ -222,16 +222,9 @@ def test_log_retire_inplace_swap_and_reliable(spark, tmp_path):
     assert spark.read.parquet(path).count() == 6
     # in-place, reliable flavor: survivors go through the fault-
     # tolerant checkpoint dir before the destructive overwrite
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None
-    ckpt = str(tmp_path / "ckpt")
-    sc.setCheckpointDir(ckpt)
-    try:
-        out2 = log_retire(spark, path, _tomb(spark, [2, 5]))
-        assert {r.id for r in out2.collect()} == {1, 3, 4, 6}
-        assert glob.glob(f"{ckpt}/*/rdd-*"), "no reliable checkpoint written"
-    finally:
-        sc._jsc.sc().setCheckpointDir(None)
+    out2 = log_retire(spark, path, _tomb(spark, [2, 5]))
+    assert {r.id for r in out2.collect()} == {1, 3, 4, 6}
+    assert glob.glob(f"{checkpoint_dir}/*/rdd-*"), "no reliable checkpoint written"
     # idempotent: retiring again short-circuits (ids already gone →
     # None = "nothing rewrote", the r16 signal contract) and the disk
     # survivor set is unchanged
@@ -397,30 +390,21 @@ def test_retire_then_rebalance_compose(spark, tmp_path):
     assert all(n <= 3 for n in sizes.values())
 
 
-def test_ivf_retire_reliable_checkpoint_flavor(spark, tmp_path):
+def test_ivf_retire_reliable_checkpoint_flavor(spark, tmp_path, checkpoint_dir):
     """With a SparkContext checkpoint dir configured, the survivor
     delta materializes through the fault-tolerant dir before the
     destructive partition overwrite (the compact_decisions contract),
     and the retire result is unchanged."""
-    import glob as _glob
-
     from auraverse_etl_pipeline_spark.operators.similarity import ivf_index
 
     idx = ivf_index(_corpus(spark), nlist=2, quantizer="sample")
     root = str(tmp_path / "ivf_rel")
     idx.save(root)
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None
-    ckpt = str(tmp_path / "ckpt")
-    sc.setCheckpointDir(ckpt)
-    try:
-        touched = ivf_retire(
-            spark, root, _tomb(spark, [12]), members_table="assignments"
-        )
-        assert touched != []
-        assert _glob.glob(f"{ckpt}/*/rdd-*"), "no reliable checkpoint written"
-    finally:
-        sc._jsc.sc().setCheckpointDir(None)
+    touched = ivf_retire(
+        spark, root, _tomb(spark, [12]), members_table="assignments"
+    )
+    assert touched != []
+    assert glob.glob(f"{checkpoint_dir}/*/rdd-*"), "no reliable checkpoint written"
     ids = {r.id for r in spark.read.parquet(f"{root}/assignments").collect()}
     assert ids == {10, 11, 13, 14, 15}
 

@@ -288,7 +288,7 @@ def test_compact_decisions_keep_earliest(spark, tmp_path):
         compact_decisions(spark, path, order_col="batch_id", keep="newest")
 
 
-def test_compact_decisions_reliable_checkpoint(spark, tmp_path):
+def test_compact_decisions_reliable_checkpoint(spark, tmp_path, checkpoint_dir):
     """In-place compaction with a configured SparkContext checkpoint
     dir auto-upgrades to fault-tolerant checkpoint(): during the
     destructive overwrite the survivors live in the checkpoint dir,
@@ -298,8 +298,6 @@ def test_compact_decisions_reliable_checkpoint(spark, tmp_path):
 
     from auraverse_etl_pipeline_spark.sources.sinks import compact_decisions
 
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None  # suite default: local blocks
     path = str(tmp_path / "decisions")
     schema = "id bigint, batch_id bigint, kept boolean"
     spark.createDataFrame(
@@ -308,16 +306,8 @@ def test_compact_decisions_reliable_checkpoint(spark, tmp_path):
     spark.createDataFrame(
         [(i, 2, False) for i in range(0, 20, 4)], schema
     ).coalesce(1).write.mode("append").parquet(path)
-    ckpt = str(tmp_path / "ckpt")
-    sc.setCheckpointDir(ckpt)
-    try:
-        out = compact_decisions(spark, path, order_col="batch_id")
-        got = {r.id: (r.batch_id, r.kept) for r in out.collect()}
-        assert got[0] == (2, False) and got[1] == (1, True) and len(got) == 20
-        # the survivors really went through the reliable dir
-        assert glob.glob(f"{ckpt}/*/rdd-*"), "no reliable checkpoint written"
-    finally:
-        # restore the no-checkpoint-dir default so later tests'
-        # reliable=None auto-detection (CC, compaction) is unaffected
-        sc._jsc.sc().setCheckpointDir(None)
-    assert sc.getCheckpointDir() is None
+    out = compact_decisions(spark, path, order_col="batch_id")
+    got = {r.id: (r.batch_id, r.kept) for r in out.collect()}
+    assert got[0] == (2, False) and got[1] == (1, True) and len(got) == 20
+    # the survivors really went through the reliable dir
+    assert glob.glob(f"{checkpoint_dir}/*/rdd-*"), "no reliable checkpoint written"
